@@ -6,6 +6,17 @@ edges map-side (no shuffle), host projection is a column expression, and
 every rollup is a plain hash aggregate — all scale-free. The quadratic
 object (host×host matrix) is only ever materialized as the *sparse* edge
 group-by, never as a cross join.
+
+The integer rank family (PageRank, TrustRank, the persisted rank ladder,
+its delta fold, batched personalized PageRank) is ONE recurrence that
+differs only in its teleport term. Each call collapses the edge list once
+into a weighted host adjacency (:func:`rank_adjacency`: pair multiplicity,
+source out-degree, one zero-weight self row per host carrying the teleport
+weight), and every iteration is one join + one aggregate over it
+(:func:`rank_step`). That is exact against the per-edge recurrence the
+DuckDB oracles replay: k duplicate edges sum to k · (rank div out_deg) in
+integer arithmetic, and the self rows add 0 — they only keep every host
+alive through the aggregate.
 """
 
 from __future__ import annotations
@@ -13,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ocr_platform_spark.operators.partitioning import host_of
 
@@ -58,6 +69,175 @@ def host_degree_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _materialize(df: DataFrame, name: str, checkpoint_dir: str | None) -> DataFrame:
+    """Cut ``df``'s lineage: ``localCheckpoint`` by default, or a parquet
+    table under ``checkpoint_dir`` (durable across executor loss, bounded
+    memory) — bit-identical rows either way (pinned in tests)."""
+    if checkpoint_dir is None:
+        return df.localCheckpoint(eager=True)
+    path = f"{checkpoint_dir}/{name}"
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def rank_adjacency(
+    edges: DataFrame,
+    teleport_hosts: DataFrame | None = None,
+    checkpoint_dir: str | None = None,
+    name: str = "adjacency",
+) -> tuple[DataFrame, int, int]:
+    """The WEIGHTED host adjacency every integer rank variant iterates over,
+    built and materialized once per call → ``(adj, n_hosts, n_teleport)``.
+
+    ``adj`` is (src_host, dst_host, mult, out_deg, tele): one row per
+    distinct host pair with ``mult = count(*)`` of its edge rows and
+    ``out_deg = Σ mult`` of its source (= the raw edge count), plus one
+    zero-weight SELF row ``(h, h, 0, 1, tele)`` per host. Self rows keep
+    every host alive through the step's inner join + aggregate (no
+    ``hosts`` left join) and carry the teleport weight: ``tele = 1`` on the
+    self rows of teleport targets (every host, or only hosts named in
+    ``teleport_hosts``' first column — the TrustRank seeds), 0 elsewhere.
+    ``n_hosts`` counts self rows, ``n_teleport`` the teleport targets."""
+    hosts = (
+        edges.select(F.col("src_host").alias("host"))
+        .unionByName(edges.select(F.col("dst_host").alias("host")))
+        .distinct()
+    )
+    if teleport_hosts is None:
+        hosts = hosts.withColumn("tele", F.lit(1).cast("long"))
+    else:
+        targets = teleport_hosts.select(
+            F.col(teleport_hosts.columns[0]).alias("host")
+        ).distinct()
+        hosts = hosts.join(
+            targets.withColumn("_t", F.lit(1).cast("long")), "host", "left"
+        ).select("host", F.coalesce("_t", F.lit(0).cast("long")).alias("tele"))
+    pairs = edges.groupBy("src_host", "dst_host").agg(F.count("*").alias("mult"))
+    adj = _materialize(
+        pairs.select(
+            "src_host",
+            "dst_host",
+            "mult",
+            F.sum("mult").over(Window.partitionBy("src_host")).alias("out_deg"),
+            F.lit(0).cast("long").alias("tele"),
+        ).unionByName(
+            hosts.select(
+                F.col("host").alias("src_host"),
+                F.col("host").alias("dst_host"),
+                F.lit(0).cast("long").alias("mult"),
+                F.lit(1).cast("long").alias("out_deg"),
+                "tele",
+            )
+        ),
+        name,
+        checkpoint_dir,
+    )
+    counts = adj.where("mult = 0").agg(F.count("*"), F.sum("tele")).first()
+    return adj, counts[0], counts[1] or 0
+
+
+def rank_step(
+    adj: DataFrame,
+    ranks: DataFrame,
+    damping_pct: int,
+    base: int,
+    group: str | None = None,
+) -> DataFrame:
+    """One iteration of the integer rank recurrence over :func:`rank_adjacency`
+    — ONE join and ONE aggregate, the shape of the oracle CTEs'
+    ``pr ⋈ e2 GROUP BY dst``:
+
+        rank'(g, h) = teleport(g, h) + (d · Σ mult · (rank div out_deg)) div 100
+        teleport(g, h) = base · tele(h)   ([h = g]-gated when ``group`` is set)
+
+    ``ranks`` is (host, rank), or (group, host, rank) with ``group`` the PPR
+    seed column. Exact against the per-edge recurrence: k duplicate edge
+    rows contribute Σ_k (r div deg) = k · (r div deg) in integer arithmetic,
+    and self rows add 0 to the sum, so ranks and row sets are bit-identical
+    to summing over the raw url-grain edge list."""
+    keys = [group] if group else []
+    agg = (
+        adj.join(ranks.withColumnRenamed("host", "src_host"), "src_host")
+        .groupBy(*keys, "dst_host")
+        .agg(
+            F.sum(F.expr("mult * (rank div out_deg)")).alias("inc"),
+            F.sum("tele").alias("tele"),
+        )
+    )
+    tele = F.col("tele") * base
+    if group:
+        tele = F.when(F.col("dst_host") == F.col(group), tele).otherwise(F.lit(0))
+    return agg.select(
+        *keys,
+        F.col("dst_host").alias("host"),
+        (tele + F.expr(f"({damping_pct} * inc) div 100")).cast("long").alias("rank"),
+    )
+
+
+def _integer_rank(
+    edges: DataFrame,
+    teleport_hosts: DataFrame | None,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+    checkpoint_dir: str | None,
+    prefix: str,
+    convergence_delta: int | None = None,
+    metrics_out: dict | None = None,
+    levels: list | None = None,
+) -> DataFrame:
+    """The shared loop of :func:`host_pagerank`, :func:`host_trustrank`
+    and :func:`host_pagerank_states`: the teleport mass
+    ``(100-damping_pct)·scale div 100`` and the start vector's ``scale`` are
+    each split evenly (floor div) over the teleport targets. Lineage is cut
+    every 3 iterations (each eager checkpoint is its own job), every
+    iteration when ``convergence_delta`` is set (the delta aggregate would
+    otherwise re-run the iteration) or when ``levels`` collects the
+    per-iteration tables."""
+    adj, _, n_tele = rank_adjacency(
+        edges, teleport_hosts, checkpoint_dir, f"{prefix}adjacency"
+    )
+    if metrics_out is not None:
+        metrics_out.update({"iterations_run": 0, "converged": False})
+    self_rows = adj.where("mult = 0").select(F.col("src_host").alias("host"), "tele")
+    if n_tele == 0:
+        zero = self_rows.select("host", F.lit(0).cast("long").alias("rank"))
+        if levels is not None:
+            levels.extend(zero for _ in range(iterations + 1))
+        return zero
+    base = ((100 - damping_pct) * scale // 100) // n_tele
+    ranks = self_rows.select(
+        "host", (F.col("tele") * (scale // n_tele)).cast("long").alias("rank")
+    )
+    if levels is not None:
+        ranks = _materialize(ranks, f"{prefix}ranks-0000", checkpoint_dir)
+        levels.append(ranks)
+    for i in range(iterations):
+        new_ranks = rank_step(adj, ranks, damping_pct, base)
+        if (
+            convergence_delta is not None
+            or levels is not None
+            or (i + 1) % 3 == 0
+            or i == iterations - 1
+        ):
+            new_ranks = _materialize(new_ranks, f"{prefix}ranks-{i + 1:04d}", checkpoint_dir)
+        if levels is not None:
+            levels.append(new_ranks)
+        converged = convergence_delta is not None and (
+            ranks.alias("o")
+            .join(new_ranks.alias("n"), "host")
+            .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))))
+            .first()[0]
+            or 0
+        ) <= convergence_delta
+        ranks = new_ranks
+        if metrics_out is not None:
+            metrics_out.update({"iterations_run": i + 1, "converged": converged})
+        if converged:
+            break
+    return ranks
+
+
 def host_pagerank(
     edges: DataFrame,
     iterations: int = 10,
@@ -86,97 +266,25 @@ def host_pagerank(
     the catalog query's DuckDB oracle does exactly that with a recursive
     CTE (queries.py ``host_pagerank``).
 
-    Each iteration is one join + one aggregate. Lineage control:
-    ``localCheckpoint`` by default; pass ``checkpoint_dir`` to write the
-    rank table to parquet per checkpoint instead — the 10^8-host shape
-    (durable across executor loss, bounded driver memory), bit-identical
-    ranks either way (pinned in tests).
+    The edge list is collapsed ONCE into the weighted
+    :func:`rank_adjacency` (pair multiplicities + per-host self rows), so
+    each iteration is one join + one aggregate (:func:`rank_step`) over a
+    pair-grain table instead of three joins over the url-grain edge rows;
+    the sum over k duplicate edges is k · (rank div out_deg) exactly, so
+    the ranks are the per-edge recurrence's bit for bit. Lineage control:
+    ``localCheckpoint`` every 3 iterations by default; pass
+    ``checkpoint_dir`` to write the adjacency and rank tables to parquet
+    instead (bit-identical ranks, pinned in tests).
 
     ``convergence_delta`` (rank units) enables early exit: stop when the
     L1 rank change of an iteration is ≤ the threshold. Disabled by default
     so fixed-iteration replays (the DuckDB recursive-CTE oracle) stay
     bit-exact. ``metrics_out``, if given, receives ``iterations_run`` and
     ``converged``."""
-    spark = edges.sparkSession
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
-
-    def _truncate(df: DataFrame, it: int) -> DataFrame:
-        return _materialize(df, f"ranks-{it:04d}")
-
-    # hosts and deg are consumed by EVERY iteration's join; materialize both
-    # once up front so each iteration's plan is two small joins over
-    # materialized tables instead of re-deriving the vertex set and the
-    # degree aggregate from the edge list (fewer/smaller stages per job →
-    # less scheduling overhead and far less tail sensitivity on a busy
-    # cluster). hosts.count() rides on the same materialization.
-    hosts = _materialize(
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct(),
-        "hosts",
-    )
-    n_hosts = hosts.count()
-    if metrics_out is not None:
-        metrics_out.update({"iterations_run": 0, "converged": False})
-    if n_hosts == 0:
-        return hosts.withColumn("rank", F.lit(0).cast("long"))
-    base = ((100 - damping_pct) * scale // 100) // n_hosts
-    deg = _materialize(
-        edges.groupBy("src_host").agg(F.count("*").alias("out_deg")), "degrees"
-    )
-    ranks = hosts.withColumn("rank", F.lit(scale // n_hosts).cast("long"))
-
-    for i in range(iterations):
-        contribs = (
-            edges.join(ranks, edges.src_host == ranks.host)
-            .join(deg, "src_host")
-            .select(
-                F.col("dst_host").alias("host"),
-                F.expr("rank div out_deg").alias("contrib"),
-            )
-            .groupBy("host")
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        new_ranks = hosts.join(contribs, "host", "left").select(
-            "host",
-            (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
-        if convergence_delta is not None:
-            # materialize first (the delta agg would otherwise re-execute
-            # the whole iteration DAG when the next iteration consumes it)
-            new_ranks = _truncate(new_ranks, i + 1)
-            delta = (
-                ranks.alias("o")
-                .join(new_ranks.alias("n"), "host")
-                .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-                .first()["d"]
-            ) or 0
-            ranks = new_ranks
-            if metrics_out is not None:
-                metrics_out["iterations_run"] = i + 1
-            if delta <= convergence_delta:
-                if metrics_out is not None:
-                    metrics_out["converged"] = True
-                break
-        else:
-            ranks = new_ranks
-            # truncate lineage every few iterations — each eager checkpoint
-            # is its own job, so checkpointing every step pays ~iterations
-            # extra job round-trips for no correctness gain
-            if (i + 1) % 3 == 0 or i == iterations - 1:
-                ranks = _truncate(ranks, i + 1)
-            if metrics_out is not None:
-                metrics_out["iterations_run"] = i + 1
-    return ranks.orderBy(F.desc("rank"), "host")
+    return _integer_rank(
+        edges, None, iterations, damping_pct, scale, checkpoint_dir, "",
+        convergence_delta=convergence_delta, metrics_out=metrics_out,
+    ).orderBy(F.desc("rank"), "host")
 
 
 def host_trustrank(
@@ -193,8 +301,9 @@ def host_trustrank(
     spam clusters far from any seed starve — the standard crawl-frontier /
     spam-demotion companion to plain PageRank.
 
-    Same exact-integer recurrence as :func:`host_pagerank` with the base
-    term restricted to seeds:
+    Same exact-integer recurrence and the same :func:`rank_adjacency` /
+    :func:`rank_step` pair as :func:`host_pagerank`, with the teleport
+    weight on the seeds' self rows only:
 
         base(h) = ((100-damping_pct)·scale div 100) div n_seeds  if h ∈ seeds
                   0                                              otherwise
@@ -202,65 +311,11 @@ def host_trustrank(
 
     Initial mass sits entirely on the seeds (scale div n_seeds each).
     Replayable bit-for-bit by a recursive CTE (catalog ``host_trustrank``);
-    seeds not present in the graph are ignored."""
-    spark = edges.sparkSession
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
-
-    hosts = _materialize(
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .join(
-            seeds.select(F.col(seeds.columns[0]).alias("host"))
-            .distinct()
-            .withColumn("_seed", F.lit(True)),
-            "host",
-            "left",
-        )
-        .select("host", F.coalesce("_seed", F.lit(False)).alias("is_seed")),
-        "tr-hosts",
-    )
-    n_seeds = hosts.where("is_seed").count()
-    if n_seeds == 0:
-        return hosts.select("host", F.lit(0).cast("long").alias("rank"))
-    base_seed = ((100 - damping_pct) * scale // 100) // n_seeds
-    deg = _materialize(
-        edges.groupBy("src_host").agg(F.count("*").alias("out_deg")), "tr-degrees"
-    )
-    ranks = hosts.select(
-        "host",
-        F.when(F.col("is_seed"), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for i in range(iterations):
-        contribs = (
-            edges.join(ranks, edges.src_host == ranks.host)
-            .join(deg, "src_host")
-            .select(
-                F.col("dst_host").alias("host"),
-                F.expr("rank div out_deg").alias("contrib"),
-            )
-            .groupBy("host")
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        ranks = hosts.join(contribs, "host", "left").select(
-            "host",
-            (
-                F.when(F.col("is_seed"), F.lit(base_seed)).otherwise(F.lit(0))
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
-        if (i + 1) % 3 == 0 or i == iterations - 1:
-            ranks = _materialize(ranks, f"tr-ranks-{i + 1:04d}")
-    return ranks.orderBy(F.desc("rank"), "host")
+    seeds not present in the graph are ignored, and with none left every
+    rank is 0."""
+    return _integer_rank(
+        edges, seeds, iterations, damping_pct, scale, checkpoint_dir, "tr-"
+    ).orderBy(F.desc("rank"), "host")
 
 
 def host_spam_mass(
@@ -359,27 +414,19 @@ def host_hits(
     parquet): the total's aggregate branch re-evaluates its input, and
     without the cut that doubling compounds exponentially across
     phases."""
-    spark = edges.sparkSession
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
-
     hosts = _materialize(
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))
         .distinct(),
         "hits-hosts",
+        checkpoint_dir,
     )
     n_hosts = hosts.count()
     if n_hosts == 0:
         return hosts.select(
             "host", F.lit(0).cast("long").alias("hub"), F.lit(0).cast("long").alias("authority")
         )
-    e = _materialize(edges.select("src_host", "dst_host"), "hits-edges")
+    e = _materialize(edges.select("src_host", "dst_host"), "hits-edges", checkpoint_dir)
     state = hosts.select(
         "host",
         F.lit(scale // n_hosts).cast("long").alias("hub"),
@@ -399,6 +446,7 @@ def host_hits(
                 .alias(col),
             ),
             name,
+            checkpoint_dir,
         )
 
     for i in range(iterations):
@@ -472,17 +520,9 @@ def connected_components(
     logarithmic round count; not needed for the bounded-diameter dedup
     workload this serves.
     """
-    spark = pairs.sparkSession
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        return df.localCheckpoint(eager=True)
 
     def _truncate(df: DataFrame, it: int) -> DataFrame:
-        return _materialize(df, f"labels-{it:04d}")
+        return _materialize(df, f"labels-{it:04d}", checkpoint_dir)
 
     nodes = (
         pairs.select(F.col(id_a).alias("id"))
@@ -498,6 +538,7 @@ def connected_components(
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .unionByName(nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))),
         "cc-edges",
+        checkpoint_dir,
     )
     # initial labels from the materialized self-loops (distinct-safe even
     # if the pair list carries explicit self-pairs)
@@ -852,51 +893,11 @@ def host_pagerank_states(
     iteration) so a later edge delta can be folded by
     :func:`host_pagerank_delta` without re-walking the whole graph.
     ``ranks_k`` is bit-identical to ``host_pagerank(edges, k)`` (same
-    recurrence, every iteration checkpointed because the delta fold
-    consumes each level twice)."""
-    spark = edges.sparkSession
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_hosts = hosts.count()
-    if n_hosts == 0:
-        z = hosts.withColumn("rank", F.lit(0).cast("long"))
-        return [z for _ in range(iterations + 1)]
-    base = ((100 - damping_pct) * scale // 100) // n_hosts
-    deg = edges.groupBy("src_host").agg(F.count("*").alias("out_deg")).localCheckpoint(
-        eager=True
-    )
-    ranks = hosts.withColumn(
-        "rank", F.lit(scale // n_hosts).cast("long")
-    ).localCheckpoint(eager=True)
-    states = [ranks]
-    for _ in range(iterations):
-        contribs = (
-            edges.join(ranks, edges.src_host == ranks.host)
-            .join(deg, "src_host")
-            .select(
-                F.col("dst_host").alias("host"),
-                F.expr("rank div out_deg").alias("contrib"),
-            )
-            .groupBy("host")
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        ranks = (
-            hosts.join(contribs, "host", "left")
-            .select(
-                "host",
-                (
-                    F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        states.append(ranks)
-    return states
+    adjacency and step, every iteration checkpointed because the delta
+    fold consumes each level twice)."""
+    levels: list[DataFrame] = []
+    _integer_rank(edges, None, iterations, damping_pct, scale, None, "", levels=levels)
+    return levels
 
 
 def host_pagerank_delta(
@@ -928,10 +929,13 @@ def host_pagerank_delta(
     only if an in-neighbour differed at i-1 or its in-edge set changed),
     so per-iteration EDGE work collapses from O(m) to O(edges touching
     the delta's i-hop out-neighbourhood) — the recrawl win: a small edge
-    delta touches a shallow cone, not the web. The stored level is read
-    once per iteration to diff the recomputed rows; the full output table
-    is assembled ONCE at the end (stored ranks overlaid with the final
-    changed set). All delta-sized frames broadcast.
+    delta touches a shallow cone, not the web. The recompute is the
+    shared :func:`rank_step` over the post-delta :func:`rank_adjacency`
+    filtered to the affected destinations (their in-pairs plus their self
+    rows, so every affected host comes back exactly once). The stored
+    level is read once per iteration to diff the recomputed rows; the full
+    output table is assembled ONCE at the end (stored ranks overlaid with
+    the final changed set). All delta-sized frames broadcast.
 
     Falls back to a full :func:`host_pagerank` recompute when the delta
     changes the VERTEX set (a new or vanished host shifts the per-host
@@ -961,18 +965,14 @@ def host_pagerank_delta(
     added, removed = _pairs(added), _pairs(removed)
     new_edges = edges.join(
         removed, ["src_host", "dst_host"], "left_anti"
-    ).unionByName(added).localCheckpoint(eager=True)
+    ).unionByName(added)
+    adj, n_hosts_new, _ = rank_adjacency(new_edges)
 
     hosts_old = states[0].select("host")
-    hosts_new = (
-        new_edges.select(F.col("src_host").alias("host"))
-        .unionByName(new_edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
+    hosts_new = adj.where("mult = 0").select(F.col("src_host").alias("host"))
     n_hosts = hosts_old.count()
-    vertex_drift = (
+    vertex_drift = n_hosts != n_hosts_new or (
         hosts_new.join(hosts_old, "host", "left_anti").limit(1).count()
-        + hosts_old.join(hosts_new, "host", "left_anti").limit(1).count()
     )
     if vertex_drift:
         if metrics_out is not None:
@@ -995,10 +995,7 @@ def host_pagerank_delta(
         )
 
     base = ((100 - damping_pct) * scale // 100) // n_hosts
-    deg_new = (
-        new_edges.groupBy("src_host").agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
+    out_pairs = adj.where("mult > 0").select("src_host", "dst_host")
     # the structural set S: srcs whose contribution routing or out_deg
     # changed — delta-sized, broadcast everywhere below
     s_hosts = (
@@ -1027,7 +1024,7 @@ def host_pagerank_delta(
             changed.select("host").unionByName(s_hosts).distinct()
         )
         affected = (
-            new_edges.join(
+            out_pairs.join(
                 F.broadcast(touched.withColumnRenamed("host", "src_host")),
                 "src_host",
                 "left_semi",
@@ -1037,33 +1034,12 @@ def host_pagerank_delta(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        in_edges = new_edges.join(
+        in_adj = adj.join(
             F.broadcast(affected.withColumnRenamed("host", "dst_host")),
             "dst_host",
             "left_semi",
         )
-        prev_rank = states[i - 1].join(
-            F.broadcast(changed.select("host", F.col("rank").alias("_new"))),
-            "host",
-            "left",
-        ).select("host", F.coalesce("_new", "rank").alias("rank"))
-        contribs = (
-            in_edges.join(prev_rank, in_edges.src_host == prev_rank.host)
-            .join(deg_new, "src_host")
-            .select(
-                F.col("dst_host").alias("host"),
-                F.expr("rank div out_deg").alias("contrib"),
-            )
-            .groupBy("host")
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        recomputed = affected.join(contribs, "host", "left").select(
-            "host",
-            (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
+        recomputed = rank_step(in_adj, _overlay(states[i - 1], changed), damping_pct, base)
         changed = (
             recomputed.alias("n")
             .join(states[i].alias("o"), "host")
@@ -1088,9 +1064,8 @@ def host_ppr(
     scale: int = 10**9,
 ) -> DataFrame:
     """BATCHED personalized PageRank: one integer recurrence per seed
-    host, all seeds advanced together through ONE set of joins per
-    iteration — (seed, host, rank) with teleport mass restarting entirely
-    at the seed:
+    host, all seeds advanced together through ONE join per iteration —
+    (seed, host, rank) with teleport mass restarting entirely at the seed:
 
         rank_0(s, h)  = scale if h = s else 0
         rank'(s, h)   = [h = s]·((100-d)·scale div 100)
@@ -1098,31 +1073,23 @@ def host_ppr(
 
     The per-seed vectors are the topic-conditioned authority signal a
     crawler uses to prioritize hosts near trusted hubs (Haveliwala's
-    topic-sensitive PageRank; same integer discipline as
-    :func:`host_pagerank`, so any engine replaying the recurrence matches
-    bit-for-bit — the catalog oracle does, with seed carried as a column
-    of the recursive CTE).
+    topic-sensitive PageRank; same integer discipline, adjacency and step
+    as :func:`host_pagerank`, so any engine replaying the recurrence
+    matches bit-for-bit — the catalog oracle does, with seed carried as a
+    column of the recursive CTE).
 
     Scale shape: ``seeds`` is hub-count-sized and broadcast into the
-    start vector; each iteration is one edges⋈ranks join keyed on the
-    source host (seed rides along as a grouping column, so k seeds cost
-    one pass over k·m join rows, not k passes) plus a (seed, host)
-    aggregate. State is (n_seeds × n_hosts) rows — bounded by the hub
-    list, not the corpus."""
-    spark = edges.sparkSession
-    hosts = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionByName(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    start vector, the dense seed × host grid; each iteration is one
+    :func:`rank_step` with the seed riding along as the group column
+    (k seeds cost one pass over k·m join rows, not k passes), and the
+    adjacency's self rows keep every grid cell alive. State is
+    (n_seeds × n_hosts) rows — bounded by the hub list, not the corpus."""
+    adj, _, _ = rank_adjacency(edges)
     seeds = F.broadcast(seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct())
-    base = (100 - damping_pct) * scale // 100
-    deg = edges.groupBy("src_host").agg(F.count("*").alias("out_deg")).localCheckpoint(
-        eager=True
-    )
     ranks = (
-        hosts.crossJoin(seeds)
+        adj.where("mult = 0")
+        .select(F.col("src_host").alias("host"))
+        .crossJoin(seeds)
         .select(
             "seed",
             "host",
@@ -1133,27 +1100,9 @@ def host_ppr(
         )
         .localCheckpoint(eager=True)
     )
-    grid = ranks.select("seed", "host")
+    base = (100 - damping_pct) * scale // 100
     for i in range(iterations):
-        contribs = (
-            edges.join(ranks, edges.src_host == ranks.host)
-            .join(deg, "src_host")
-            .select(
-                "seed",
-                F.col("dst_host").alias("host"),
-                F.expr("rank div out_deg").alias("contrib"),
-            )
-            .groupBy("seed", "host")
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        ranks = grid.join(contribs, ["seed", "host"], "left").select(
-            "seed",
-            "host",
-            (
-                F.when(F.col("host") == F.col("seed"), F.lit(base)).otherwise(F.lit(0))
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
+        ranks = rank_step(adj, ranks, damping_pct, base, group="seed")
         if (i + 1) % 3 == 0 or i == iterations - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.orderBy("seed", F.desc("rank"), "host")

@@ -36,8 +36,10 @@ DEFAULT_BIG_PAYLOAD_BYTES = 256 * 1024
 #: ``parse_url(HOST)``: parse_url strips ports/userinfo and yields NULL on
 #: parse failure while the oracle regex keeps the raw authority and yields
 #: '' — a mixed pair silently drops rows on one side for URLs with ports,
-#: userinfo, or junk schemes. Parity pinned in tests/test_urlfns.py.
-HOST_RE = r"^https?://([^/?#]+)"
+#: userinfo, or junk schemes. The scheme matches case-insensitively
+#: (``HTTP://Example.com/x`` has host ``Example.com``, never ''), the
+#: authority keeps its case. Parity pinned in tests/test_urlfns.py.
+HOST_RE = r"(?i)^https?://([^/?#]+)"
 
 
 def host_of(url_col: str | F.Column = "url") -> F.Column:

@@ -102,16 +102,22 @@ def _stream_func(
         rows.extend(zip((int(t) for t in pdf["t"]), (int(v) for v in pdf["k"])))
     rows.sort()
     in_burst, run, last_t = state.get if state.exists else (False, 0, -1)
-    # Out-of-order guard: the fold assumes per-key t order ACROSS
-    # micro-batches. An interval at or before the already-folded frontier
-    # cannot be folded as if current (silent mis-folding); it is excluded
-    # from the fold and surfaced in-band as a ``late`` row so violations
-    # of the ordering contract are detected, not swallowed.
-    late = [(t, k) for t, k in rows if t <= last_t]
-    rows = [(t, k) for t, k in rows if t > last_t]
-    if rows:
-        last_t = rows[-1][0]
-    trans, in_burst, run = fold_transitions(rows, in_burst, run)
+    # Out-of-order guard: the fold assumes per-key strictly increasing t
+    # ACROSS and WITHIN micro-batches. An interval at or before the folded
+    # frontier — an earlier batch's, or an earlier (t, k)-sorted row of
+    # this batch with the same t — cannot be folded as if current (silent
+    # mis-folding); it is excluded from the fold and surfaced in-band as a
+    # ``late`` row so violations of the ordering contract are detected,
+    # not swallowed.
+    fresh: list[tuple[int, int]] = []
+    late: list[tuple[int, int]] = []
+    for t, k in rows:
+        if t <= last_t:
+            late.append((t, k))
+        else:
+            fresh.append((t, k))
+            last_t = t
+    trans, in_burst, run = fold_transitions(fresh, in_burst, run)
     state.update((in_burst, run, last_t))
     out = [(t, "late") for t, _ in late] + trans
     if out:
@@ -125,10 +131,12 @@ def burst_transitions_stream(counts_stream: DataFrame) -> DataFrame:
     """Streaming face over a (key, t, k) stream: same fold, state carried
     across micro-batches. Intervals must arrive per key in t order across
     batches (the upstream hourly aggregate emits them that way); within a
-    batch any order is fine (sorted before folding). A row at or before
-    the key's folded frontier (``t <= last_t`` in state) violates that
-    contract: it is NOT folded and comes back as ``kind='late'`` instead,
-    so out-of-order input is detected rather than silently mis-folded."""
+    batch any order is fine (sorted by (t, k) before folding). A row at or
+    before the key's folded frontier (``t <= last_t`` in state), or a
+    repeat of an earlier row's ``t`` in the same batch (only the lowest-k
+    row of a repeated ``t`` is folded), violates that contract: it is NOT
+    folded and comes back as ``kind='late'`` instead, so out-of-order or
+    duplicated input is detected rather than silently mis-folded."""
     return counts_stream.groupBy("key").applyInPandasWithState(
         _stream_func,
         outputStructType=_OUT_DDL,

@@ -712,3 +712,104 @@ def test_host_ppr_batched_seeds_localize(spark):
         out.groupBy("seed").agg(F.sum("rank").alias("t")).collect()
     )
     assert all(t["t"] <= 10**9 for t in totals)
+
+
+# --- the shared weighted adjacency + step ------------------------------------
+
+# duplicate edges (a→b ×3, c→a ×2), a real self-loop (b→b), a dangling
+# source (src: out-links only), a destination-only host (sink) and an
+# isolated seed (island, in its own two-host component)
+_STEP_EDGES = [
+    ("a", "b"), ("a", "b"), ("a", "b"), ("a", "c"),
+    ("b", "b"), ("b", "c"),
+    ("c", "a"), ("c", "a"), ("c", "sink"),
+    ("src", "a"), ("src", "c"),
+    ("island", "island2"),
+]
+
+
+def _replay_rank(edges, start, teleport, iterations, damping_pct=85):
+    """Pure-python per-EDGE integer recurrence: every edge row contributes
+    its own ``rank div out_deg`` (no pair collapsing)."""
+    hosts = {h for e in edges for h in e}
+    out_deg = {h: sum(1 for s, _ in edges if s == h) for h in hosts}
+    rank = {h: start.get(h, 0) for h in hosts}
+    for _ in range(iterations):
+        inc = dict.fromkeys(hosts, 0)
+        for s, d in edges:
+            inc[d] += rank[s] // out_deg[s]
+        rank = {h: teleport.get(h, 0) + (damping_pct * inc[h]) // 100 for h in hosts}
+    return rank
+
+
+def _ordered(rank):
+    return sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
+def test_rank_family_matches_per_edge_replay(spark):
+    """host_pagerank, host_trustrank and host_ppr over the weighted
+    adjacency equal a per-edge replay of the recurrence bit for bit, rows
+    and order included."""
+    from ocr_platform_spark.operators.linkgraph import (
+        host_pagerank,
+        host_ppr,
+        host_trustrank,
+    )
+
+    scale, it = 10**9, 7
+    tele_mass = 15 * scale // 100
+    e = spark.createDataFrame(_STEP_EDGES, "src_host string, dst_host string")
+    hosts = sorted({h for p in _STEP_EDGES for h in p})
+
+    n = len(hosts)
+    pr = _replay_rank(
+        _STEP_EDGES, dict.fromkeys(hosts, scale // n),
+        dict.fromkeys(hosts, tele_mass // n), it,
+    )
+    assert [tuple(r) for r in host_pagerank(e, iterations=it).collect()] == _ordered(pr)
+
+    seeds = ["a", "island", "nothere"]  # unknown seeds are ignored
+    in_graph = [s for s in seeds if s in hosts]
+    tr = _replay_rank(
+        _STEP_EDGES, dict.fromkeys(in_graph, scale // len(in_graph)),
+        dict.fromkeys(in_graph, tele_mass // len(in_graph)), it,
+    )
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "host string")
+    got_tr = [tuple(r) for r in host_trustrank(e, seed_df, iterations=it).collect()]
+    assert got_tr == _ordered(tr)
+    assert tr["island2"] > 0 and tr["sink"] > 0 and tr["src"] == 0
+
+    ppr_seeds = ["island", "src"]
+    expect = []
+    for s in sorted(ppr_seeds):
+        v = _replay_rank(_STEP_EDGES, {s: scale}, {s: tele_mass}, it)
+        expect += [(s, h, r) for h, r in _ordered(v)]
+    got_ppr = host_ppr(
+        e, spark.createDataFrame([(s,) for s in ppr_seeds], "seed string"), iterations=it
+    )
+    assert [tuple(r) for r in got_ppr.collect()] == expect
+
+
+def test_rank_step_is_one_join_one_aggregate(spark):
+    """The adjacency collapses duplicate pairs and adds one zero-weight self
+    row per host; an uncheckpointed iteration's optimized logical plan is
+    exactly one Join and one Aggregate."""
+    from ocr_platform_spark.operators.linkgraph import rank_adjacency, rank_step
+
+    e = spark.createDataFrame(_STEP_EDGES, "src_host string, dst_host string")
+    adj, n_hosts, n_tele = rank_adjacency(e)
+    rows = {(r["src_host"], r["dst_host"], r["mult"]): r for r in adj.collect()}
+    assert n_hosts == n_tele == 7
+    assert rows[("a", "b", 3)]["out_deg"] == 4
+    assert rows[("b", "b", 1)]["out_deg"] == 2  # the real self-loop
+    assert rows[("b", "b", 0)]["out_deg"] == 1  # the self row beside it
+    assert rows[("sink", "sink", 0)]["tele"] == 1
+    assert sum(r["mult"] for r in rows.values()) == len(_STEP_EDGES)
+
+    ranks = adj.where("mult = 0").select(
+        F.col("src_host").alias("host"), F.lit(1000).cast("long").alias("rank")
+    )
+    plan = rank_step(adj, ranks, 85, 10)._jdf.queryExecution().optimizedPlan().toString()
+    ops = [line.lstrip(" :+-") for line in plan.splitlines()]
+    assert sum(op.startswith("Join ") for op in ops) == 1
+    assert sum(op.startswith("Aggregate ") for op in ops) == 1

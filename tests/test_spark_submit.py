@@ -192,3 +192,39 @@ def test_spark_submit_graph_maintenance_build_then_fold(spark, tmp_path):
     assert sorted(os.listdir(out_dir)) == [
         "edges", "iter=0000", "iter=0001", "iter=0002", "iter=0003", "iter=0004"
     ]
+
+
+def test_graph_maintenance_fold_refuses_out_equal_to_states(tmp_path):
+    """fold with --out resolving to the --states directory (here through a
+    symlink) would overwrite the ladder it reads: the tool refuses with a
+    named argparse error before any Spark work, and the states are
+    untouched."""
+    import sys
+
+    states = tmp_path / "states"
+    for i in range(3):
+        level = states / f"iter={i:04d}"
+        level.mkdir(parents=True)
+        (level / "part-0.parquet").write_bytes(f"level {i}".encode())
+    alias = tmp_path / "alias"
+    alias.symlink_to(states, target_is_directory=True)
+
+    def snapshot():
+        return {
+            str(p.relative_to(states)): p.read_bytes()
+            for p in sorted(states.rglob("*")) if p.is_file()
+        }
+
+    before = snapshot()
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "run_graph_maintenance.py"),
+            "fold", "--edges", str(tmp_path / "edges"),
+            "--states", str(states), "--out", str(alias) + "/",
+        ],
+        capture_output=True, text=True, timeout=120, cwd=REPO,
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "--out and --states resolve to the same directory" in proc.stderr
+    assert snapshot() == before

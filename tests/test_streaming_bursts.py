@@ -153,3 +153,41 @@ def test_stream_flags_out_of_order_intervals_as_late(spark, tmp_path):
     got = [(r["key"], r["t"], r["kind"]) for r in spark.read.parquet(out_dir).collect()]
     assert {g for g in got if g[2] == "late"} == {("a", 1, "late"), ("a", 5, "late")}
     assert {g for g in got if g[2] != "late"} == expected
+
+
+def test_stream_flags_intra_batch_duplicate_t_as_late(spark, tmp_path):
+    """A repeated t within ONE micro-batch is a contract violation too: the
+    lowest-k row of that t is folded, every repeat comes back as
+    kind='late'. Folded silently, the (5, 9) repeat below would start the
+    second burst's run a step early (enter at t=6 instead of t=7)."""
+    in_order = [("a", t, k) for t, k in enumerate([0, 9, 9, 2, 2, 3, 9, 9, 2, 2])]
+    expected = {
+        (r["key"], r["t"], r["kind"])
+        for r in burst_transitions_batch(
+            spark.createDataFrame(in_order, "key string, t long, k long")
+        ).collect()
+    }
+    assert ("a", 7, "enter") in expected
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    pd.DataFrame(in_order + [("a", 5, 9)], columns=["key", "t", "k"]).to_parquet(
+        os.path.join(input_dir, "batch-0.parquet")
+    )
+    stream = spark.readStream.schema("key string, t long, k long").parquet(input_dir)
+    out_dir = str(tmp_path / "out")
+    q = (
+        burst_transitions_stream(stream)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
+    got = [(r["key"], r["t"], r["kind"]) for r in spark.read.parquet(out_dir).collect()]
+    assert [g for g in got if g[2] == "late"] == [("a", 5, "late")]
+    assert {g for g in got if g[2] != "late"} == expected

@@ -187,8 +187,9 @@ def test_surt_key_dialect_parity(spark):
 
 def test_host_of_dialect_parity(spark):
     """host_of (Spark) ≡ frontier.HOST_SQL (DuckDB) on adversarial urls —
-    ports (kept), userinfo (kept: raw authority), parse failures (''), and
-    non-http schemes ('')."""
+    ports (kept), userinfo (kept: raw authority), parse failures (''),
+    non-http schemes (''), and upper/mixed-case http(s) schemes (matched,
+    authority case kept)."""
     import duckdb
 
     from ocr_platform_spark.operators.frontier import HOST_SQL
@@ -202,6 +203,11 @@ def test_host_of_dialect_parity(spark):
         "not a url",
         "https://",
         "http://host.only",
+        "HTTP://Example.com/x",
+        "HTTPS://WWW.Example.org:443/a",
+        "hTtPs://mixed.example.org/a",
+        "Http://user@Case.example.org",
+        "FTP://example.org/a",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = [r[0] for r in df.select(host_of("url")).collect()]
@@ -217,6 +223,14 @@ def test_host_of_dialect_parity(spark):
     assert got == exp
     assert got[1] == "example.org:8080"  # port kept, never silently stripped
     assert got[4] == "" and got[3] == ""  # '' (row kept), never NULL
+    # scheme case never drops a url from the host grain
+    assert got[7:11] == [
+        "Example.com",
+        "WWW.Example.org:443",
+        "mixed.example.org",
+        "user@Case.example.org",
+    ]
+    assert got[11] == ""
 
 
 def test_surt_collapses_capture_variants(spark):

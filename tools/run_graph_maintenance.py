@@ -21,11 +21,12 @@ in O(delta cone) instead of O(graph); operators/linkgraph.
 host_pagerank_states). ``fold`` reads that ladder, applies the delta
 (added edge rows; removed (src_host, dst_host) pairs — every matching
 edge row goes), writes the UPDATED ladder to ``--out`` (chained folds:
-tomorrow's delta folds against today's output), and prints one JSON line
-with the fold metrics (fallback reason if the vertex set drifted,
-per-iteration affected/changed counts, top hosts by updated rank). The
-post-delta edge set is written next to the ladder (``edges/``) so the
-next fold starts from it.
+tomorrow's delta folds against today's output; ``--out`` must not resolve
+to the ``--states`` directory, which it would overwrite while reading),
+and prints one JSON line with the fold metrics (fallback reason if the
+vertex set drifted, per-iteration affected/changed counts, top hosts by
+updated rank). The post-delta edge set is written next to the ladder
+(``edges/``) so the next fold starts from it.
 """
 
 from __future__ import annotations
@@ -62,6 +63,16 @@ def main() -> int:
     ap.add_argument("--top", type=int, default=10, help="top hosts in the report")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
+    if args.mode == "fold":
+        if not args.out:
+            ap.error("fold mode requires --out")
+        if os.path.realpath(args.out) == os.path.realpath(args.states):
+            # the fold reads the ladder lazily while writing --out level by
+            # level: one directory for both would overwrite its own input
+            ap.error(
+                "fold mode: --out and --states resolve to the same directory "
+                f"({os.path.realpath(args.out)}); write the updated ladder elsewhere"
+            )
 
     from ocr_platform_spark.operators.linkgraph import (
         host_pagerank_delta,
@@ -83,8 +94,6 @@ def main() -> int:
             "states": args.states,
         }
     else:
-        if not args.out:
-            ap.error("fold mode requires --out")
         states = _read_states(spark, args.states)
         added = spark.read.parquet(args.delta_add) if args.delta_add else None
         removed = spark.read.parquet(args.delta_remove) if args.delta_remove else None
